@@ -106,7 +106,7 @@ _FRONT = [
     # word_count_min_sketch (r13 CMS rework), basket_part_pairs (r13
     # shared-exchange edge build), bpe_merge_pairs,
     # corpus_token_budget_fill (two-level running sum),
-    # streaming_stateful_sessions (the heaviest Python-state drain,
+    # streaming_stateful_sessions (the session-window state drain,
     # r13-profiled) + streaming_stream_stream_join,
     # asof_join_events_forward, part_pareto_frontier (two-level
     # running max), events_linear_attribution,
@@ -178,10 +178,10 @@ _FRONT = [
     "corpus_pack_sequences", "doc_quality_classifier",
     # streaming drains (real micro-batch engine, exact oracles): the
     # incremental near-dup index (rides the r13 MinHash kernel +
-    # struct band keys), the stateful tier's heaviest drain
+    # struct band keys), the per-user session-window state drain
     # (streaming_stateful_sessions, never sampled, r13-profiled), the
     # never-sampled inner stream-stream join + the left variant, and
-    # the applyInPandasWithState running totals
+    # the JVM-state running totals
     "streaming_minhash_index", "streaming_stateful_sessions",
     "streaming_stream_stream_join",
     "streaming_stream_stream_left_join", "streaming_user_running_totals",

@@ -273,6 +273,15 @@ def two_level_quantiles(
     extra corpus scan. Parity vs ``F.percentile`` is fuzzed bit-exact
     in tests/test_twolevel.py.
     """
+    clash = [c for c in df.columns if c.startswith("_tq_")]
+    if clash:
+        # ``pre`` below keeps df["*"] next to the operator's own _tq_*
+        # columns; a caller column of that prefix would make them
+        # ambiguous downstream
+        raise ValueError(
+            f"two_level_quantiles reserves the _tq_ column prefix; "
+            f"rename input column(s) {clash}"
+        )
     names = [nm for nm, _ in channels]
     part_cols = list(part_cols)
     gcols = ["_tq_g"] if part_cols else []

@@ -5,13 +5,13 @@ availableNow trigger, memory sink in complete mode) and returns the
 drained result. Because the windowed aggregations are the same logical
 plans as their batch twins in queries/events.py, the streaming results
 are held to full DuckDB oracles — not just rows-only checks. The
-custom applyInPandasWithState tier carries oracles too: the
-EventTimeTimeout sessionizer's finalization equals the batch
-lag/cumsum sessionizer, and since round 5 the running-totals op
-accumulates integer fixed-point state, so its drain bit-matches the
-batch DECIMAL aggregate; streaming_scatter_pc1 drains through the
-incremental scatter sink and inherits the batch PC1 oracle unchanged
-(additive integer sufficient statistics).
+per-user state tier carries oracles too: the session-window
+sessionizer's finalized sessions equal the batch lag/cumsum
+sessionizer, and the running-totals aggregate accumulates DECIMAL
+state, so its drain bit-matches the batch DECIMAL aggregate;
+streaming_scatter_pc1 drains through the incremental scatter sink and
+inherits the batch PC1 oracle unchanged (additive integer sufficient
+statistics).
 
 Multi-batch semantics (watermark-delayed emission, state across
 triggers, dedup of replayed keys) are exercised in
@@ -338,11 +338,10 @@ FROM events
 GROUP BY user_id
 """)
 def streaming_user_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom per-key state via applyInPandasWithState: cumulative
-    per-user counts/totals, emitted per trigger.
+    """Per-user running state in the JVM state store: cumulative
+    per-user counts/totals, emitted per trigger (update mode).
 
-    Exact oracle since round 5: the state accumulates value as integer
-    1e-4 fixed-point (scaled JVM-side by a decimal cast), so the total
+    Exact oracle: the state accumulates value as DECIMAL, so the total
     is order-independent and the final emission per user — the fixture
     is a single file, hence one availableNow micro-batch — bit-matches
     the batch DECIMAL aggregate in any engine."""
@@ -689,17 +688,15 @@ SELECT user_id,
 FROM numbered GROUP BY user_id, session_seq
 """)
 def streaming_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful sessionization with EventTimeTimeout
-    finalization (streaming/stateful.py::user_sessions_stateful, r4):
-    per-user event times buffer in the state store and the session
-    operator ITSELF decides when to emit — the timeout fires once the
-    watermark proves no admissible event can extend the buffer, then
-    the gap-split runs over the complete per-user stream. The sentinel
-    replay pushes the watermark past every real event so all sessions
-    finalize, making the drain equal to the batch lag/cumsum
-    sessionizer — a FULL oracle on an applyInPandasWithState operator
-    (the running-totals one stays rows-only because float accumulation
-    order differs; sessions are pure integer boundaries)."""
+    """Per-user sessionization with watermark finalization
+    (streaming/stateful.py::user_sessions_stateful): a native
+    session_window aggregate keeps each open session's first/last
+    event and count in the state store and emits it once the watermark
+    passes last event + gap, i.e. when no admissible event can extend
+    it. The sentinel replay pushes the watermark past every real event
+    so all sessions finalize, making the drain equal to the batch
+    lag/cumsum sessionizer — a FULL oracle with session bounds as
+    epoch microseconds."""
     import shutil
 
     from pyspark.sql import functions as F

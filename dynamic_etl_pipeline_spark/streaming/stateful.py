@@ -1,277 +1,62 @@
-"""Custom stateful streaming operators via applyInPandasWithState
-(SURVEY §2.9/§2.11): arbitrary per-key state the built-in windowed
-aggregations can't express.
+"""Per-user stateful streaming operators, held in the JVM state store.
 
-State is partitioned by key across executors, so throughput scales
-with the cluster; each micro-batch touches only the keys present in
-that batch.
+Both are native streaming aggregates: the state lives in Spark's state
+store (HDFS-backed by default, RocksDB when the provider is set), each
+micro-batch touches only the keys present in that batch, and no row
+crosses into a Python worker. State is partitioned by key across
+executors, so throughput scales with the cluster.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType, DoubleType, LongType, StringType, StructField, StructType,
-)
+from pyspark.sql import functions as F
 
-_OUT = StructType([
-    StructField("user_id", LongType()),
-    StructField("n_events", LongType()),
-    StructField("total_value", DoubleType()),
-])
-_STATE = StructType([
-    StructField("n", LongType()),
-    StructField("cents", LongType()),
-])
-
-# Fixed-point scale for the value accumulator. State holds the total as
-# an integer number of 1e-4 units, so accumulation is exact and
-# order-independent — double addition in arrival order would make the
-# emitted total depend on shuffle order (and diverge from any oracle in
-# the last ulp). The scaling happens JVM-side (decimal cast * 10^4) so
-# the pandas worker only ever sums int64.
-_VALUE_SCALE = 10_000
+from .rollups import dsum
 
 
-def _update(key: tuple, pdfs: Iterator[pd.DataFrame],
-            state: GroupState) -> Iterator[pd.DataFrame]:
-    n, cents = state.get if state.exists else (0, 0)
-    for pdf in pdfs:
-        n += len(pdf)
-        cents += int(pdf["_cents"].fillna(0).sum())
-    state.update((n, cents))
-    # int/int true division in Python is correctly rounded at ANY
-    # magnitude (CPython computes it over the exact big-int ratio), so
-    # this is the single rounding a DECIMAL engine performs for
-    # CAST(cents/10^4 AS DOUBLE). float(cents)/SCALE would round twice
-    # once |cents| >= 2^53 (ADVICE r5) — pinned in
-    # tests/test_streaming.py::test_cents_division_single_rounding.
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n_events": [n],
-         "total_value": [cents / _VALUE_SCALE]}
-    )
-
-
-def _with_cents(events: DataFrame) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    return events.withColumn(
-        "_cents",
-        (F.col("value").cast("decimal(27,4)") * _VALUE_SCALE).cast("long"),
-    )
-
-
-def user_running_totals(events: DataFrame,
-                        watermark: str = "2 hours") -> DataFrame:
+def user_running_totals(events: DataFrame) -> DataFrame:
     """Cumulative per-user event count + value total, emitted once per
-    user per micro-batch — running state no windowed agg expresses
-    (batch equivalent after a full replay: plain groupBy sum/count;
-    DuckDB oracle: CAST(sum(CAST(value AS DECIMAL(27,4))) AS DOUBLE))."""
-    return (
-        _with_cents(events).withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _update, _OUT, _STATE, "update", GroupStateTimeout.NoTimeout
-        )
+    user per micro-batch in update mode (batch equivalent after a full
+    replay: plain groupBy sum/count; DuckDB oracle:
+    CAST(sum(CAST(value AS DECIMAL(27,4))) AS DOUBLE)).
+
+    The total accumulates as DECIMAL, so it is order-independent and
+    the DECIMAL -> DOUBLE cast rounds once, at emission. No watermark:
+    the result never depended on one (a late event still counts), and
+    a watermark would add a no-data trigger to every drain; state is
+    one row per user, bounded by the key space."""
+    return events.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        dsum("value").alias("total_value"),
     )
-
-
-# ---------------------------------------------------------------------------
-# The same operator on Spark 4's transformWithStateInPandas — the
-# successor API to applyInPandasWithState: explicit state variables on
-# a handle (value/list/map state, timers, TTL) instead of one opaque
-# tuple, and a RocksDB-backed store.
-
-
-def user_running_totals_tws(events: DataFrame,
-                            watermark: str = "2 hours") -> DataFrame:
-    """Twin of user_running_totals on the transformWithState API.
-
-    Requires the RocksDB state-store provider (tests set it per-run)
-    AND the ``protobuf`` Python package (the API's state-server wire
-    format) — absent protobuf, raises NotImplementedError up front
-    instead of crashing the streaming Python worker mid-query.
-    Functionally identical output: one (user_id, n_events,
-    total_value) row per user per micro-batch.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the protobuf package "
-            "(not installed in this environment); use "
-            "user_running_totals (applyInPandasWithState) instead"
-        ) from exc
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", _STATE
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            existing = self._totals.get()
-            n, cents = existing if existing is not None else (0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                cents += int(pdf["_cents"].fillna(0).sum())
-            self._totals.update((n, cents))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n],
-                 "total_value": [float(cents) / _VALUE_SCALE]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        _with_cents(events).withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=RunningTotals(),
-            outputStructType=_OUT,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Timeout-driven stateful sessionization (round 4): the canonical
-# custom-state operator — the session CLOSES when the event-time
-# watermark passes last_event + gap, i.e. the state itself decides
-# when to emit, which no built-in windowed aggregation expresses
-# (session_window comes close but cannot carry arbitrary per-session
-# state or emit custom finalization records).
-
-_SESS_OUT = StructType([
-    StructField("user_id", LongType()),
-    StructField("session_start", LongType()),   # epoch MICROSECONDS
-    StructField("session_end", LongType()),
-    StructField("n_events", LongType()),
-])
-_SESS_STATE = StructType([
-    StructField("frag_start", ArrayType(LongType())),
-    StructField("frag_end", ArrayType(LongType())),
-    StructField("frag_n", ArrayType(LongType())),
-])
-
-
-def merge_fragments(frags: list, new_ts: list, gap_us: int) -> list:
-    """Fold new event times into gap-separated session fragments
-    (r4 judge item #8): each fragment is ``[start, end, n_events]`` of
-    a maximal run whose consecutive sorted events are ≤ gap apart.
-
-    This IS the sessionization relation computed incrementally:
-    fragments are the connected components of the "within gap" chain
-    over the event multiset, and interval merging with gap tolerance
-    preserves components exactly — so folding per batch equals sorting
-    the full buffer at the end (property-fuzzed in
-    tests/test_streaming.py). State per user is O(open fragments),
-    not O(events in the lateness horizon): a hot user hammering one
-    session keeps exactly ONE fragment no matter the event count.
-    """
-    allf = sorted(
-        [list(f) for f in frags] + [[t, t, 1] for t in sorted(new_ts)]
-    )
-    merged: list = []
-    for s, e, n in allf:
-        if merged and s - merged[-1][1] <= gap_us:
-            merged[-1][1] = max(merged[-1][1], e)
-            merged[-1][2] += n
-        else:
-            merged.append([s, e, n])
-    return merged
-
-
-def _session_fn(gap_us: int):
-    def fn(key: tuple, pdfs: Iterator[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        uid = key[0]
-        if state.hasTimedOut:
-            # watermark passed max(ts)+gap: NO admissible future event
-            # can extend any buffered session (late rows beyond the
-            # watermark are filtered) -> every fragment IS a finished
-            # session; emit and clear
-            starts, ends, ns = state.get
-            state.remove()
-            if len(starts):
-                yield pd.DataFrame({
-                    "user_id": [uid] * len(starts),
-                    "session_start": list(starts),
-                    "session_end": list(ends),
-                    "n_events": list(ns),
-                })
-            return
-        # buffer arrivals pre-merged into gap-separated fragments:
-        # out-of-order batches may interleave earlier events later (a
-        # late event can even BRIDGE two fragments into one), so
-        # nothing finalizes before the watermark proves completeness —
-        # but the state the finalization needs is only the fragments,
-        # O(open fragments) per user instead of O(events) (r4 judge
-        # item #8). At production scale the transformWithState list
-        # state (RocksDB-backed, incrementally appendable) carries the
-        # same design without re-serializing the arrays per batch.
-        wm_ms = state.getCurrentWatermarkMs()
-        new_ts = []
-        for pdf in pdfs:
-            # int64 ns -> epoch micros (sub-second ts must survive:
-            # truncating to seconds moved session boundaries a round-off
-            # away from the exact batch twin)
-            new_ts.extend(
-                (pdf["ts"].astype("int64") // 1_000).tolist()
-            )
-        # custom stateful ops do NOT get automatic late-row filtering
-        # (unlike built-in aggregations): drop events at/below the
-        # watermark ourselves, or a straggler re-opens state after its
-        # session already flushed
-        new_ts = [t for t in new_ts if t // 1000 > wm_ms]
-        if not new_ts and not state.exists:
-            return
-        frags = (
-            list(zip(*state.get)) if state.exists else []
-        )
-        merged = merge_fragments(frags, new_ts, gap_us)
-        state.update((
-            [f[0] for f in merged],
-            [f[1] for f in merged],
-            [f[2] for f in merged],
-        ))
-        # close when the watermark passes max+gap; clamped just past
-        # the current watermark (Spark rejects past timestamps)
-        wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(
-            max((merged[-1][1] + gap_us) // 1000 + 1, wm + 1)
-        )
-
-    return fn
 
 
 def user_sessions_stateful(events: DataFrame, gap_minutes: int = 30,
                            watermark: str = "2 hours") -> DataFrame:
-    """Sessionize with explicit per-user state + EventTimeTimeout:
-    in-batch gap splits emit immediately; the open session lives in
-    the state store with a timeout at last_event + gap, so it
-    finalizes exactly when the watermark proves no event can extend it
-    — at-scale behavior identical to session_window but with a
-    user-defined record (and arbitrary extra state if needed).
+    """Per-user sessions split on a ``gap_minutes`` inactivity gap,
+    emitted in append mode once the watermark passes a session's last
+    event + gap, i.e. when no admissible event can extend it. Events
+    exactly ``gap_minutes`` apart share a session (a new one starts
+    only past the gap, like the oracle's ``> INTERVAL``). Output:
+    ``(user_id, session_start, session_end, n_events)`` with both
+    times as epoch MICROSECONDS of the first and last event.
 
     Batch twin (full replay + far-future sentinel to flush): the
     lag/cumsum sessionizer of queries/events.py::events_sessionize —
     equality pinned in tests/test_streaming.py."""
     return (
         events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _session_fn(gap_minutes * 60 * 1_000_000), _SESS_OUT, _SESS_STATE,
-            "append", GroupStateTimeout.EventTimeTimeout,
+        .groupBy("user_id", F.session_window("ts", f"{gap_minutes} minutes"))
+        .agg(
+            F.min("ts").alias("_first"),
+            F.max("ts").alias("_last"),
+            F.count(F.lit(1)).alias("n_events"),
+        )
+        .select(
+            "user_id",
+            F.unix_micros("_first").alias("session_start"),
+            F.unix_micros("_last").alias("session_end"),
+            "n_events",
         )
     )

@@ -604,11 +604,11 @@ def test_stateful_floor_tool_accepts_both_flag_forms():
     sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
     from bench_stateful_floor import parse_args
 
-    eq = parse_args(["/tmp/x", "--runs=5", "--batch-sizes=1,2"])
-    sp = parse_args(["/tmp/x", "--runs", "5", "--batch-sizes", "1,2"])
-    assert eq == sp == ("/tmp/x", 5, [1, 2])
+    eq = parse_args(["/tmp/x", "--runs=5", "--chunks=1,4"])
+    sp = parse_args(["/tmp/x", "--runs", "5", "--chunks", "1,4"])
+    assert eq == sp == ("/tmp/x", 5, [1, 4])
     # defaults + positional-only still work
-    assert parse_args([])[1:] == (2, [10_000, 100_000])
+    assert parse_args([])[1:] == (2, [1, 8])
     import pytest
 
     with pytest.raises(SystemExit):

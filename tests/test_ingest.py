@@ -45,6 +45,37 @@ def test_txt_reader_skips_blank_lines(spark, fixtures_dir):
     assert len(rows) == 5
 
 
+def test_python_workers_import_package_outside_repo_root(fixtures_dir,
+                                                        tmp_path):
+    """A local[N] session started outside the repo root, with the
+    package on sys.path only, must still run a Python kernel: its
+    workers start in the session's cwd, so they find the package only
+    through the PYTHONPATH get_spark hands them (read_txt's
+    encoding-sniffing mapInPandas kernel is the probe)."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parents[1])
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from dynamic_etl_pipeline_spark.ingest import read_txt\n"
+        "from dynamic_etl_pipeline_spark.session import get_spark\n"
+        "spark = get_spark('outside-root', 'local[2]')\n"
+        f"print('LINES', read_txt(spark, {str(fixtures_dir / 'notes.txt')!r})"
+        ".count())\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert "LINES 5" in out.stdout, out.stderr[-3000:]
+
+
 def test_txt_reader_latin1_fallback(spark, fixtures_dir):
     df = read_txt(spark, str(fixtures_dir / "notes_latin1.txt"))
     contents = [r["content"] for r in df.orderBy("line_no").collect()]

@@ -450,63 +450,6 @@ def test_quality_split_routes_bad_records_to_dlq(spark, tmp_path):
     assert good.count() + bad.count() == len(rows)
 
 
-def test_transform_with_state_matches_apply_in_pandas_twin(spark, sf_dir,
-                                                           chunked_events):
-    """The transformWithState (RocksDB store) running totals must end at
-    the same per-user state as the applyInPandasWithState twin and the
-    batch aggregate."""
-    from dynamic_etl_pipeline_spark.streaming.stateful import (
-        user_running_totals_tws,
-    )
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        directory, schema = chunked_events
-        stream = stream_events_dir(spark, directory, schema)
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            user_running_totals_tws(stream)
-        pytest.skip("protobuf unavailable: transformWithState gated off")
-
-    directory, schema = chunked_events
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(prov_key, None)
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream = stream_events_dir(spark, directory, schema,
-                                   max_files_per_trigger=1)
-        drained = run_available_now_to_memory(
-            user_running_totals_tws(stream), output_mode="update"
-        )
-        # update mode re-emits per batch: keep the LAST row per user
-        # (max n_events is monotone)
-        got = {}
-        for r in drained.collect():
-            cur = got.get(r["user_id"])
-            if cur is None or r["n_events"] > cur[0]:
-                got[r["user_id"]] = (r["n_events"], round(r["total_value"], 4))
-
-        batch = (
-            load_table(spark, sf_dir, "events")
-            .groupBy("user_id")
-            .agg(F.count("*").alias("n"),
-                 F.sum(F.col("value").cast("decimal(27,4)"))
-                 .cast("double").alias("t"))
-        )
-        want = {r["user_id"]: (r["n"], round(r["t"], 4))
-                for r in batch.collect()}
-        assert got == want
-    finally:
-        if prev is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev)
-
-
 def test_dedup_index_equals_batch_lsh_twin(spark, tmp_path):
     """Streaming-twin equivalence for the near-dup index: draining a
     3-batch corpus through the incremental index must find exactly the
@@ -899,71 +842,6 @@ def test_stateful_session_timeout_matches_batch_sessionizer(spark, tmp_path):
     assert got == want
 
 
-def test_merge_fragments_equals_sort_split():
-    """r4 judge item #8 (fragment state): folding events into
-    gap-separated fragments batch by batch — in any arrival order —
-    equals sorting the full buffer once and splitting on gap. 200
-    random multisets, random batch partitions, duplicate timestamps
-    included."""
-    import random
-
-    from dynamic_etl_pipeline_spark.streaming.stateful import (
-        merge_fragments,
-    )
-
-    def sort_split(ts, gap):
-        out, cur = [], None
-        for t in sorted(ts):
-            if cur is None:
-                cur = [t, t, 1]
-            elif t - cur[1] > gap:
-                out.append(cur)
-                cur = [t, t, 1]
-            else:
-                cur[1], cur[2] = t, cur[2] + 1
-        if cur is not None:
-            out.append(cur)
-        return out
-
-    rng = random.Random(20260814)
-    for trial in range(200):
-        gap = rng.choice([1, 3, 10])
-        n = rng.randrange(0, 40)
-        ts = [rng.randrange(0, 100) for _ in range(n)]
-        # random batch partition, arbitrary order inside each batch
-        shuffled = ts[:]
-        rng.shuffle(shuffled)
-        frags: list = []
-        i = 0
-        while i < len(shuffled):
-            j = i + rng.randrange(1, 8)
-            frags = merge_fragments(frags, shuffled[i:j], gap)
-            i = j
-        assert frags == sort_split(ts, gap), (trial, gap, ts)
-
-
-def test_hot_user_state_is_one_fragment():
-    """A hot user bursting thousands of events inside one session gap
-    keeps exactly ONE state fragment — O(open fragments), not
-    O(events in the lateness horizon)."""
-    from dynamic_etl_pipeline_spark.streaming.stateful import (
-        merge_fragments,
-    )
-
-    gap = 30 * 60 * 1_000_000  # 30 min in micros
-    frags: list = []
-    t = 0
-    for batch in range(50):
-        new = [t + i * 1_000_000 for i in range(200)]  # 1s apart
-        t = new[-1] + 1_000_000
-        frags = merge_fragments(frags, new, gap)
-    assert len(frags) == 1
-    assert frags[0][2] == 50 * 200
-    # a gap then a second burst -> exactly two fragments
-    frags = merge_fragments(frags, [t + gap + 1], gap)
-    assert len(frags) == 2 and frags[1][2] == 1
-
-
 def test_checkpoint_recovery_resumes_state_under_rocksdb(
     spark, sf_dir, tmp_path
 ):
@@ -1052,13 +930,13 @@ def test_checkpoint_recovery_resumes_state_under_rocksdb(
 def test_stateful_sessionizer_recovers_fragments_across_restart(
     spark, tmp_path
 ):
-    """Round-5 fragment state survives a checkpoint restart under the
+    """Open-session state survives a checkpoint restart under the
     RocksDB store: stop the sessionizer mid-corpus (open sessions live
-    ONLY as [start, end, n] fragments in the state store), restart from
-    the same checkpoint with the rest of the corpus + flush sentinels,
-    and the union of both runs' emissions equals the batch sessionizer
-    over the full corpus — proving the compacted state round-trips
-    through serialization and still finalizes exactly."""
+    ONLY as session-window rows in the state store), restart from the
+    same checkpoint with the rest of the corpus + flush sentinels, and
+    the union of both runs' emissions equals the batch sessionizer over
+    the full corpus — proving the session state round-trips through
+    serialization and still finalizes exactly."""
     import datetime as _dt
     import os
     import shutil
@@ -1357,16 +1235,110 @@ def test_streaming_scatter_stats_bit_exact_vs_batch_pc1(spark, sf_dir,
     } == want_cells
 
 
-def test_cents_division_single_rounding():
-    """ADVICE r5: the stateful emitter's cents -> double conversion must
-    round ONCE, like CAST(sum(DECIMAL)/10^4 AS DOUBLE). Python int/int
-    true division is correctly rounded at any magnitude; the old
-    float(cents)/SCALE double-rounded past 2^53 — witness value pinned."""
+_EVENTS_SCHEMA = (
+    "event_id long, ts timestamp, user_id long, event_type string, "
+    "value double, props string"
+)
+
+
+def _replay(spark, tmp_path, batches, op, output_mode):
+    """Stage each batch of ``(event_id, ts, user_id, value)`` rows as
+    one parquet file (ascending mtimes, so one file per trigger in
+    order), drain ``op`` over them and return the collected rows."""
+    import os
+    import shutil
+    import time as _t
+
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    for i, rows in enumerate(batches):
+        d = feed / f"d{i}"
+        spark.createDataFrame(
+            [(e, ts, u, "view", v, "{}") for e, ts, u, v in rows],
+            _EVENTS_SCHEMA,
+        ).coalesce(1).write.mode("overwrite").parquet(str(d))
+        dest = feed / f"{i:03d}.parquet"
+        shutil.move(str(next(d.glob("part-*.parquet"))), dest)
+        os.utime(dest, (_t.time() + i, _t.time() + i))
+        shutil.rmtree(d)
+    stream = stream_events_dir(spark, str(feed), _EVENTS_SCHEMA,
+                               max_files_per_trigger=1)
+    return run_available_now_to_memory(
+        op(stream), output_mode=output_mode).collect()
+
+
+def _last_per_user(rows):
+    """update mode emits once per user per batch: keep the LAST
+    emission per user (n_events is monotone)."""
+    last = {}
+    for r in rows:
+        if r["user_id"] not in last or r["n_events"] > last[r["user_id"]][0]:
+            last[r["user_id"]] = (r["n_events"], r["total_value"])
+    return last
+
+
+def test_running_totals_single_rounding(spark, tmp_path):
+    """The running total converts DECIMAL -> DOUBLE with ONE rounding,
+    like the oracle's CAST(sum(CAST(value AS DECIMAL(27,4))) AS DOUBLE):
+    the exact sum 900719925474.0995 (2^53 + 3 units of 1e-4) must not
+    come out as 900719925474.0996, which a double division of the
+    already-rounded unit count would give."""
+    import datetime as _dt
     from fractions import Fraction
 
-    from dynamic_etl_pipeline_spark.streaming.stateful import _VALUE_SCALE
+    t0 = _dt.datetime(2024, 1, 1)
+    got = _last_per_user(_replay(
+        spark, tmp_path,
+        [[(1, t0, 7, 450359962737.0497)],
+         [(2, t0 + _dt.timedelta(minutes=1), 7, 450359962737.0498)]],
+        user_running_totals, "update",
+    ))
+    want = float(Fraction(9007199254740995, 10_000))
+    assert want == 900719925474.0995
+    assert got == {7: (2, want)}
 
-    cents = 9007199254740995  # 2^53 + 3: float(cents) already rounds
-    want = float(Fraction(cents, _VALUE_SCALE))  # exact ratio, one rounding
-    assert cents / _VALUE_SCALE == want
-    assert float(cents) / _VALUE_SCALE != want  # the bug the fix removes
+
+def test_running_totals_count_late_events(spark, tmp_path):
+    """An event 6 h behind the max ts seen so far still counts: the
+    running totals hold no watermark, so nothing is dropped as late."""
+    import datetime as _dt
+
+    t0 = _dt.datetime(2024, 1, 1)
+    h = _dt.timedelta(hours=1)
+    got = _last_per_user(_replay(
+        spark, tmp_path,
+        [[(1, t0, 5, 1.0), (2, t0 + 8 * h, 5, 2.0)],
+         [(3, t0 + 2 * h, 5, 4.0)]],
+        user_running_totals, "update",
+    ))
+    assert got == {5: (3, 7.0)}
+
+
+def test_stateful_sessions_gap_boundary(spark, tmp_path):
+    """Events exactly ``gap`` apart share a session; ``gap`` + 1 us
+    apart start a new one — the oracle's ``> INTERVAL '30 minutes'``.
+    Two far-future sentinel batches push the watermark past every real
+    session so all of them finalize."""
+    import datetime as _dt
+
+    from dynamic_etl_pipeline_spark.streaming.stateful import (
+        user_sessions_stateful,
+    )
+
+    t0 = _dt.datetime(2024, 1, 1)
+    gap = _dt.timedelta(minutes=30)
+    us = _dt.timedelta(microseconds=1)
+    rows = _replay(
+        spark, tmp_path,
+        [[(1, t0, 1, 0.0), (2, t0 + gap, 1, 0.0),
+          (3, t0, 2, 0.0), (4, t0 + gap + us, 2, 0.0)],
+         [(-1, t0 + _dt.timedelta(days=10), -1, 0.0)],
+         [(-2, t0 + _dt.timedelta(days=20), -1, 0.0)]],
+        user_sessions_stateful, "append",
+    )
+    got = sorted(
+        (r["user_id"], r["session_end"] - r["session_start"], r["n_events"])
+        for r in rows if r["user_id"] >= 0
+    )
+    gap_us = gap // us
+    assert got == [(1, gap_us, 2), (2, 0, 1), (2, 0, 1)]

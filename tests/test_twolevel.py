@@ -416,6 +416,25 @@ def test_grouped_two_level_quantiles_bitexact_vs_percentile(
             assert gr[c] == w[c], (w["grp"], c, gr[c], w[c])
 
 
+def test_quantiles_reject_reserved_column_prefix(spark):
+    """The operator's internal columns are _tq_-prefixed and ride next
+    to the input's columns, so an input column with that prefix is
+    refused up front instead of going ambiguous downstream."""
+    import pytest
+
+    from dynamic_etl_pipeline_spark.operators.twolevel import (
+        two_level_quantiles,
+    )
+
+    df = spark.range(20).select(
+        F.col("id").cast("double").alias("v"), F.lit(1).alias("_tq_v"))
+    bucket = lambda c: F.floor(c / 10).cast("long")  # noqa: E731
+    with pytest.raises(ValueError, match="_tq_v"):
+        two_level_quantiles(df, "v", bucket, [0.5])
+    out = two_level_quantiles(df.drop("_tq_v"), "v", bucket, [0.5])
+    assert out.collect()[0]["q0_all"] == 9.5
+
+
 def test_grouped_quantiles_group_cardinality_guard(spark):
     """VERDICT r8 item 4: an unbounded group key must raise
     GroupCardinalityError (the offsets frame would be data-sized)
