@@ -57,12 +57,17 @@ def normalize_event_ts(df: DataFrame, ntz: bool = True) -> DataFrame:
 # ANY scale. This is the production stance the bench ingest path
 # already documents ("schemas are declared, not re-inferred per
 # batch") applied to the fixture catalog: infer once, then declare.
-# The key covers (ADVICE r12): the path's mtime+size (a rewritten
-# fixture invalidates naturally), and every session conf that changes
-# what parquet schema inference reports — nanosAsLong (TIMESTAMP(NANOS)
-# as LongType vs TimestampType), inferTimestampNTZ, binaryAsString,
+# The key covers: a content stamp of the path (a rewritten fixture
+# invalidates naturally) and every session conf that changes what
+# parquet schema inference reports — nanosAsLong (TIMESTAMP(NANOS) as
+# LongType vs TimestampType), inferTimestampNTZ, binaryAsString,
 # int96AsTimestamp — so sessions with different settings never share
-# an entry.
+# an entry. A single-file table is stamped with its own (mtime, size);
+# a directory table with the newest (mtime, size) over its part files
+# plus their count, because a directory's own stat only changes when
+# entries are added, removed or renamed, not when a part file is
+# rewritten in place. Remote paths (hdfs/s3) cannot be stat'ed here
+# and get no content-based invalidation: their key is conf-only.
 _SCHEMA_CACHE: dict[tuple, "object"] = {}
 
 _INFERENCE_CONFS = (
@@ -73,14 +78,27 @@ _INFERENCE_CONFS = (
 )
 
 
-def _schema_key(spark: SparkSession, path: str) -> tuple:
+def _content_stamp(path: str) -> tuple | None:
     import os
 
     try:
-        st = os.stat(path)
-        stamp = (st.st_mtime_ns, st.st_size)
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return (st.st_mtime_ns, st.st_size)
+        parts = [
+            os.stat(os.path.join(root, f))
+            for root, _, files in os.walk(path)
+            for f in files if not f.startswith((".", "_"))
+        ]
     except OSError:
-        stamp = None  # non-local path (hdfs/s3): conf-only key
+        return None  # non-local path (hdfs/s3): conf-only key
+    newest = max(((st.st_mtime_ns, st.st_size) for st in parts),
+                 default=(0, 0))
+    return (*newest, len(parts))
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple:
+    stamp = _content_stamp(path)
     confs = tuple(
         spark.conf.get(c, default) for c, default in _INFERENCE_CONFS
     )

@@ -39,7 +39,18 @@ _MODES = ("local", "disk", "reliable")
 
 
 def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Materialize ``df`` under the session's configured strategy."""
+    """Materialize ``df`` under the session's configured strategy.
+
+    Observation contract: with ``eager=True`` every mode runs an action
+    that posts the metrics of any ``df.observe(obs, ...)`` in the plan,
+    so callers may read ``obs.get`` right after this returns (the
+    near-dup fast paths, k-means and connected components do, instead
+    of paying a separate aggregate job). ``obs.get`` blocks until the
+    metrics are posted, so a mode that executes without posting them
+    would hang every such caller rather than fail:
+    ``tests/test_materialize.py`` checks delivery in all three modes,
+    and a new mode must pass the same test.
+    """
     mode = df.sparkSession.conf.get(CONF_KEY, "local")
     if mode not in _MODES:
         raise ValueError(

@@ -14,22 +14,31 @@ Reference semantics preserved exactly:
 Differences by design: the schema document is Spark's ``StructType``
 JSON (real types) instead of a genson all-string JSON Schema
 (app.py:255-261 coerces every value to str — an artifact, not a
-semantic); storage is parquet append, not SQLite row-at-a-time.
+semantic); storage is one parquet file per appended row, not SQLite
+row-at-a-time.
 
 Scale note: these catalog tables are metadata (rows = number of schema
-versions ever seen). All data-plane work (inference) is delegated to
-Spark's own readers; ``register`` touches only a StructType.
+versions ever seen), so ``register`` launches no Spark job: it compares
+StructTypes and, on a bump, the driver writes each one-row file with
+pyarrow. Every read (``history``, ``changes``, ``latest``,
+``schema_for``) stays a Spark parquet scan, and files written by
+Spark's own writer read back in the same table.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 import json
+import os
+import uuid
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 _HISTORY_SCHEMA = T.StructType([
     T.StructField("version", T.IntegerType(), False),
@@ -50,6 +59,15 @@ def _now() -> _dt.datetime:
     return _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
 
 
+def _published(path: str) -> bool:
+    """Whether a catalog table holds a file Spark's reader can see (dot-
+    and underscore-prefixed names are unpublished temps and markers)."""
+    try:
+        return any(not n.startswith((".", "_")) for n in os.listdir(path))
+    except FileNotFoundError:
+        return False
+
+
 class SchemaRegistry:
     """Versioned schema store over two parquet catalog tables
     (``schema_history``, ``schema_changes``)."""
@@ -67,7 +85,7 @@ class SchemaRegistry:
     # -- reads ------------------------------------------------------------
 
     def _read(self, path: str, schema: T.StructType) -> DataFrame:
-        if not Path(path).exists():
+        if not _published(path):
             return self.spark.createDataFrame([], schema)
         return self.spark.read.parquet(path)
 
@@ -88,7 +106,7 @@ class SchemaRegistry:
         app.py:144-152: ORDER BY version DESC LIMIT 1)."""
         if self._latest is not None:
             return self._latest
-        if not Path(self.history_path).exists():
+        if not _published(self.history_path):
             return None  # no catalog yet: skip the empty-scan Spark job
         row = (
             self._read(self.history_path, _HISTORY_SCHEMA)
@@ -105,12 +123,25 @@ class SchemaRegistry:
     # -- writes -----------------------------------------------------------
 
     def _append(self, path: str, rows: list, schema: T.StructType) -> None:
-        # one explicit slice: the default createDataFrame splits even a
-        # single row across default-parallelism Python partitions, and a
-        # later coalesce(1) drains all of them through sequential Python
-        # worker round-trips (~5s for a 1-row catalog append)
-        rdd = self.spark.sparkContext.parallelize(rows, 1)
-        self.spark.createDataFrame(rdd, schema).write.mode("append").parquet(path)
+        # a driver-side file, not a Spark write job: toInternal gives the
+        # exact microseconds Spark's writer stores for created_at (in any
+        # process time zone), and to_arrow_schema the int32 / string /
+        # timestamp[us, UTC] / list<string> columns Spark reads back as
+        # int / string / timestamp / array<string>. The dot-prefixed temp
+        # file is invisible to Spark's reader until the rename publishes
+        # it, so a crash mid-write leaves no partial row.
+        internal = [schema.toInternal(r) for r in rows]
+        arrow_schema = to_arrow_schema(schema)
+        table = pa.Table.from_arrays(
+            [pa.array([r[i] for r in internal], type=f.type)
+             for i, f in enumerate(arrow_schema)],
+            schema=arrow_schema,
+        )
+        os.makedirs(path, exist_ok=True)
+        name = f"part-{uuid.uuid4()}.parquet"
+        tmp = os.path.join(path, f".{name}.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(path, name))
 
     def register(self, schema: T.StructType) -> tuple[int, bool]:
         """Register a batch schema; returns (version, changed).

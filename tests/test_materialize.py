@@ -4,7 +4,10 @@ reliable checkpoint, and every strategy returns the same rows."""
 
 from __future__ import annotations
 
+import threading
+
 import pytest
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from dynamic_etl_pipeline_spark.materialize import CONF_KEY, materialize
@@ -49,6 +52,26 @@ def test_reliable_mode_checkpoints(spark, reset_conf, tmp_path):
     plan = out._jdf.queryExecution().toString()
     assert "ExistingRDD" in plan or "LogicalRDD" in plan
     assert out.count() == 100
+
+
+@pytest.mark.parametrize("mode", ["local", "disk", "reliable"])
+def test_observation_metrics_post_in_every_mode(spark, reset_conf,
+                                                tmp_path, mode):
+    """The contract every Observation-rides-materialize site relies on:
+    the eager action posts the observed metrics. ``obs.get`` blocks
+    until they arrive, so it is read in a thread joined with a timeout
+    — a mode that stops posting them fails here instead of hanging."""
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    spark.conf.set(CONF_KEY, mode)
+    obs = Observation()
+    materialize(_frame(spark).observe(obs, F.max("v").alias("max_v")))
+    got: dict = {}
+    reader = threading.Thread(
+        target=lambda: got.update(obs.get), daemon=True)
+    reader.start()
+    reader.join(timeout=60)
+    assert not reader.is_alive(), f"{mode}: observed metrics never posted"
+    assert got == {"max_v": 198}
 
 
 def test_invalid_mode_raises(spark, reset_conf):

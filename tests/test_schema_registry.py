@@ -5,6 +5,8 @@ reference's shipped etl_data.db (text-schema -> CSV-schema bump).
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import types as T
 
 from dynamic_etl_pipeline_spark.ingest import read_csv, read_txt
@@ -136,3 +138,98 @@ def test_json_schema_export_type_mapping(spark, tmp_path):
     assert doc["required"] == ["kv", "n", "ok", "tags", "ts", "x"]
     with __import__("pytest").raises(ValueError):
         reg.to_json_schema(99)
+
+
+def test_bump_launches_no_spark_job(spark, tmp_path):
+    """A version bump writes its two catalog rows from the driver: no
+    Spark job (a Spark write of each one-row table cost a job apiece)."""
+    reg = SchemaRegistry(spark, str(tmp_path))
+    reg.register(schema_of("a"))
+    sc = spark.sparkContext
+    group = "schema-registry-bump"
+    sc.setJobGroup(group, "a bumping register() must schedule nothing")
+    try:
+        assert reg.register(schema_of("a", "b")) == (2, True)
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert reg.history().count() == 2
+    assert reg.changes().count() == 1
+
+
+def test_spark_written_and_driver_written_rows_read_as_one_table(
+        spark, tmp_path, monkeypatch):
+    """Catalogs written by Spark's parquet writer stay readable after a
+    driver-written bump: one table, the same dtypes, newest change
+    first, created_at exact to the microsecond."""
+    import datetime as dt
+    import json
+
+    from dynamic_etl_pipeline_spark import schema_registry as sr
+
+    t_old = dt.datetime(2026, 1, 2, 3, 4, 5, 123456)
+    t_new = dt.datetime(2026, 1, 2, 3, 4, 6, 654321)
+    reg = SchemaRegistry(spark, str(tmp_path))
+    spark.createDataFrame([
+        (1, json.dumps(schema_of("a").jsonValue()), t_old),
+        (2, json.dumps(schema_of("a", "b").jsonValue()), t_old),
+    ], sr._HISTORY_SCHEMA).write.mode("append").parquet(reg.history_path)
+    spark.createDataFrame(
+        [(1, 2, ["b"], [], t_old)], sr._CHANGES_SCHEMA,
+    ).write.mode("append").parquet(reg.changes_path)
+
+    monkeypatch.setattr(sr, "_now", lambda: t_new)
+    assert reg.register(schema_of("b", "c")) == (3, True)
+
+    history = SchemaRegistry(spark, str(tmp_path)).history()
+    assert history.dtypes == [
+        ("version", "int"), ("schema_json", "string"),
+        ("created_at", "timestamp"),
+    ]
+    rows = history.collect()
+    assert [r["version"] for r in rows] == [1, 2, 3]
+    assert [r["created_at"] for r in rows] == [t_old, t_old, t_new]
+    assert T.StructType.fromJson(json.loads(rows[2]["schema_json"])) \
+        == schema_of("b", "c")
+
+    changes = reg.changes()
+    assert changes.dtypes == [
+        ("old_version", "int"), ("new_version", "int"),
+        ("added_fields", "array<string>"),
+        ("removed_fields", "array<string>"), ("created_at", "timestamp"),
+    ]
+    assert [tuple(r) for r in changes.collect()] == [
+        (2, 3, ["c"], ["a"], t_new),
+        (1, 2, ["b"], [], t_old),
+    ]
+
+
+def test_unpublished_temp_file_is_invisible(spark, tmp_path):
+    """A crash between the temp write and the rename leaves a
+    dot-prefixed file in schema_history/; readers must not see it,
+    whether it lands beside published rows or is the first write."""
+    import json
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def crash_leftover(reg):
+        Path(reg.history_path).mkdir(parents=True, exist_ok=True)
+        pq.write_table(pa.table({
+            "version": pa.array([99], pa.int32()),
+            "schema_json": [json.dumps(schema_of("z").jsonValue())],
+            "created_at": pa.array([0], pa.timestamp("us", tz="UTC")),
+        }), f"{reg.history_path}/.part-crashed.parquet.tmp")
+
+    reg = SchemaRegistry(spark, str(tmp_path / "bumped"))
+    reg.register(schema_of("a"))
+    reg.register(schema_of("a", "b"))
+    crash_leftover(reg)
+    fresh = SchemaRegistry(spark, str(tmp_path / "bumped"))
+    assert fresh.history().count() == 2
+    assert fresh.latest() == (2, schema_of("a", "b"))
+
+    crash_leftover(SchemaRegistry(spark, str(tmp_path / "first")))
+    fresh = SchemaRegistry(spark, str(tmp_path / "first"))
+    assert fresh.history().count() == 0
+    assert fresh.latest() is None
+    assert fresh.register(schema_of("a")) == (1, True)
